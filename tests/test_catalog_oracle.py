@@ -43,3 +43,37 @@ def test_oracles_are_fully_rendered_sql():
     for name, sql in ORACLES.items():
         assert isinstance(sql, str) and sql.strip(), name
         assert "__" not in sql, f"{name}: unrendered template token"
+
+
+def test_stateful_watch_oracle_rounds_tiny_rate_to_zero():
+    """A play_rate below 1e-4 prints in exponent form, which DuckDB
+    1.0.0 casts to DECIMAL wrongly ('9.5e-05' -> 0.01). The oracle must
+    round it HALF_UP like the fold does: 0.0."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from wistia_data_pipeline_project_spark.plans.catalog_windows import (
+        STATEFUL_WATCH_SQL,
+    )
+
+    t0 = dt.datetime(2024, 1, 14, 12)
+    # user 0 -> media m0 (duration 120 s); two 'percent' events 11.4 ms
+    # apart credit 0.0114 s, so capped / duration = 9.5e-05
+    events = pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "ts": [t0, t0 + dt.timedelta(microseconds=11_400)],
+            "user_id": [0, 0],
+            "event_type": ["view", "view"],
+            "value": [10.0, 20.0],
+            "props": [None, None],
+        }
+    )
+    con = duckdb.connect()
+    con.register("events", events)
+    (row,) = con.sql(STATEFUL_WATCH_SQL).df().to_dict("records")
+    assert 0 < 0.0114 / 120 < 1e-4
+    assert row["total_watch_time"] == 0.01
+    assert row["play_rate"] == 0.0

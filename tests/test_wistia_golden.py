@@ -261,20 +261,19 @@ def test_unknown_media_no_watch_time(spark, events_df, dim_media):
 
 
 @pytest.mark.parametrize("legacy", [False, True])
-def test_fold_groups_arrays_matches_fold_group(legacy):
-    """The array fast path of the partition-scan fold (r11) must be
-    BIT-IDENTICAL to the per-group pandas fold on key-sorted input —
-    randomized over NaN pct/duration, missing ip/country, jitter-sized
-    timestamp deltas and 1-5 row groups (wider input space than the
-    Spark fixture; the Spark-level pin is
+def test_fold_groups_matches_golden(legacy):
+    """The single batch watch-time fold (``fact._fold_groups`` over
+    ``watch_step``/``watch_finish``) must equal the independent
+    plain-Python golden EXACTLY on key-sorted input — randomized over
+    NaN pct/duration, missing ip/country, jitter-sized timestamp
+    deltas and 1-5 row groups, plus three fixed edge groups (wider
+    input space than the Spark fixture; the Spark-level pin is
     test_fact_fold_scan_matches_fold_bitexact)."""
     import numpy as np
     import pandas as pd
 
-    from wistia_data_pipeline_project_spark.operators.fact import (
-        _fold_group,
-        _fold_groups_arrays,
-    )
+    from wistia_data_pipeline_project_spark.operators._scan import group_bounds
+    from wistia_data_pipeline_project_spark.operators.fact import _fold_groups
 
     rng = np.random.default_rng(11)
     names_pool = ["play", "percent", "pause", "seek", "end"]
@@ -303,25 +302,61 @@ def test_fold_groups_arrays_matches_fold_group(legacy):
                     country="US" if rng.random() > 0.6 else None,
                 )
             )
+    # edges the random draws rarely hit: the 0.01 jitter re-anchor at
+    # an equal timestamp, the equal-pct re-anchor, an exact-half rate
+    t, sec = pd.Timestamp("2024-01-01 06:00"), pd.Timedelta(seconds=1)
+    edges = {
+        "jitter": [(t, 0.1, "play"), (t, 0.115, "percent"), (t + 100 * sec, 0.2, "percent")],
+        "equal_pct": [(t, 0.5, "play"), (t + 10 * sec, 0.5, "percent"), (t + 15 * sec, 0.6, "percent")],
+        "half_rate": [(t, 0.1, "play"), (t + 15 * sec, 0.3, "percent")],  # 15/120
+    }
+    for v, evs in edges.items():
+        for i, (ts, p, name) in enumerate(evs):
+            rows.append(
+                dict(media_id="m0", visitor_id=v, date=dt.date(2024, 1, 1),
+                     received_at=ts, event_key=f"{v}_{i}", pct=p,
+                     event_name=name, duration=120.0, ip=None, country=None)
+            )
     pdf = pd.DataFrame(rows).sort_values(
         ["media_id", "visitor_id", "date", "received_at", "event_key"],
         ignore_index=True,
     )
-    codes = pd.MultiIndex.from_arrays(
-        [pdf[k] for k in ("media_id", "visitor_id", "date")]
-    ).factorize()[0]
-    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-    bounds = np.r_[starts, len(pdf)]
-    old = pd.DataFrame(
-        [
-            _fold_group(pdf.iloc[a:b], RUN_TS, legacy)
-            for a, b in zip(bounds[:-1], bounds[1:])
+    keys = ["media_id", "visitor_id", "date"]
+    bounds = group_bounds(pdf, keys)
+    got = _fold_groups(pdf, bounds, RUN_TS, legacy)
+    assert len(got) == len(bounds) - 1 == 500 + len(edges)
+    for j, (a, b) in enumerate(zip(bounds[:-1], bounds[1:])):
+        grp = pdf.iloc[a:b]
+        # the golden keys groups by received_at's date, the fold by the
+        # date column: rebase each group to start at midnight (the fold
+        # only sees time deltas) so a group straddling midnight stays
+        # one golden group. NaN pct and duration are the golden's NULLs.
+        t0 = grp["received_at"].iloc[0]
+        shift = t0 - t0.normalize()
+        duration = grp["duration"].iloc[0]
+        media = [{"hashed_id": grp["media_id"].iloc[0],
+                  "duration": None if np.isnan(duration) else duration}]
+        events = [
+            {
+                "media_id": r.media_id,
+                "visitor_key": r.visitor_id,
+                "received_at": (r.received_at - shift).to_pydatetime(),
+                "event_key": r.event_key,
+                "percent_viewed": None if np.isnan(r.pct) else r.pct,
+                "name": r.event_name,
+                "ip": r.ip,
+                "country": r.country,
+            }
+            for r in grp.itertuples()
         ]
-    )
-    new = _fold_groups_arrays(pdf, bounds, RUN_TS, legacy)
-    assert list(old.columns) == list(new.columns)
-    for c in old.columns:
-        eq = (old[c].values == new[c].values) | (
-            old[c].isna().values & new[c].isna().values
-        )
-        assert eq.all(), f"col {c} diverged"
+        (want,) = golden_fact(events, media, RUN_TS, legacy).values()
+        g = got.iloc[j]
+        assert (g.media_id, g.visitor_id, g.date) == tuple(grp[keys].iloc[0])
+        for c in ("play_count", "total_watch_time", "play_rate", "ip", "country"):
+            assert g[c] == want[c], (j, c)
+        if want["max_percent_viewed"] is None:
+            assert pd.isna(g.max_percent_viewed), j
+        else:
+            assert g.max_percent_viewed == want["max_percent_viewed"], j
+        assert g.event_timestamp == want["event_timestamp"] + shift, j
+        assert g.last_event_timestamp == grp["received_at"].iloc[-1], j

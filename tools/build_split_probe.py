@@ -39,10 +39,10 @@ def main() -> None:
     spark = get_spark(app_name="build-split-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # bench.py's warmup: JVM/codegen + the Python worker pool
-    qs["events_high_water_mark"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    # bench.py's warmup: JVM/codegen + the Python worker pool; any
+    # entry warms the JVM if the usual one is gone from the catalog
+    warm = qs.get("events_high_water_mark") or next(iter(qs.values()))
+    warm(spark, sf_dir).write.format("noop").mode("overwrite").save()
     n_slots = spark.sparkContext.defaultParallelism
 
     def _identity(batches):

@@ -37,7 +37,20 @@ def pinned_partitions(df: DataFrame) -> int:
     return min(configured, cores * 4)
 
 
-def group_carry_scan(batches, key_col: str, fold_groups):
+def group_bounds(pdf, key_cols: list[str]):
+    """Row offsets where each key-group of a key-sorted frame starts,
+    followed by ``len(pdf)``: group ``i`` is rows
+    ``bounds[i]:bounds[i + 1]``."""
+    import numpy as np
+
+    change = np.zeros(max(len(pdf) - 1, 0), dtype=bool)
+    for k in key_cols:
+        ks = pdf[k].to_numpy()
+        change |= ks[1:] != ks[:-1]
+    return np.r_[np.flatnonzero(np.r_[True, change]), len(pdf)]
+
+
+def group_carry_scan(batches, key_cols: list[str], fold_groups):
     """Iterate Arrow batches of a key-sorted partition, yielding
     ``fold_groups(pdf)`` over complete key-groups only: the trailing
     (possibly incomplete) group of each batch is carried into the
@@ -45,7 +58,6 @@ def group_carry_scan(batches, key_col: str, fold_groups):
     handed, in partition sort order. O(carry) extra memory — one
     group, never the partition.
     """
-    import numpy as np
     import pandas as pd
 
     carry = None
@@ -55,8 +67,7 @@ def group_carry_scan(batches, key_col: str, fold_groups):
             carry = None
         if not len(pdf):
             continue
-        ks = pdf[key_col].values
-        tail = int(np.flatnonzero(ks == ks[-1])[0])
+        tail = int(group_bounds(pdf, key_cols)[-2])
         carry = pdf.iloc[tail:]
         if tail:
             yield fold_groups(pdf.iloc[:tail])

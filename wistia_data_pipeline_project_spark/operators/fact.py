@@ -9,7 +9,7 @@ grouping/null-key filter (:360-389), play count with progress fallback
 event timestamp (:484-492), max percent (:495-497), first non-null
 ip/country (:499-513).
 
-Two implementations, cross-checked in tests:
+Two formulations, cross-checked in tests:
 
 1. **Window formulation** (`fact_media_engagement`, default) — fully
    native: the fold's state is lag-1 once tracking starts, so interval
@@ -19,9 +19,15 @@ Two implementations, cross-checked in tests:
    timestamps: the reference's anchor freezes while lag-1 does not —
    divergence bounded by the duplicate-ts credit, asserted ≈0 in
    tests).
-2. **`applyInPandas` fold** (`fact_media_engagement_fold`) — the
-   bit-exact sequential port, used as the oracle for (1) and for the
-   golden tests. Arrow-batched; state never leaves a group.
+2. **The sequential state machine** — the bit-exact port, written
+   once: ``watch_step`` advances the (anchor, last_pct, total) state
+   over event-time-ordered rows and ``watch_finish`` closes a group
+   (play count, duration cap, zeroing, HALF_UP rounding). Three
+   callers run it: the grouped-map oracle
+   (`fact_media_engagement_fold`, the golden-test reference), the
+   partition scan (`fact_media_engagement_fold_scan`) and the
+   streaming twin (`streaming.pipeline.streaming_watch_time`), which
+   folds its committed prefix and a provisional copy.
 
 Quirk resolution (SURVEY §2.6, engine defaults vs `legacy` flag):
 
@@ -73,12 +79,11 @@ def _with_duration(events: DataFrame, dim_media: DataFrame) -> DataFrame:
 
 
 def _fold_input(events: DataFrame, dim_media: DataFrame) -> DataFrame:
-    """The shared input projection of all THREE fact formulations
-    (window, grouped-map fold, partition-scan fold): valid events +
-    broadcast duration dim, one column set, one set of casts. A
-    single copy so a schema tweak cannot silently split the
-    pytest-pinned bit-equivalence between the formulations
-    (review r05)."""
+    """The shared input projection of the window formulation and
+    both batch callers of the state machine (grouped-map, partition
+    scan): valid events + broadcast duration dim, one column set, one
+    set of casts. A single copy so a schema tweak cannot silently
+    split the pytest-pinned equivalence between them."""
     return _with_duration(_valid_events(events), dim_media).select(
         "media_id",
         F.col("visitor_key").alias("visitor_id"),
@@ -216,7 +221,7 @@ def fact_media_engagement(
 
 
 # ---------------------------------------------------------------------------
-# applyInPandas fold — bit-exact sequential oracle
+# The sequential watch-time state machine and its batch callers
 # ---------------------------------------------------------------------------
 
 
@@ -230,218 +235,97 @@ def _round2(x: float) -> float:
     )
 
 
-def _fold_group(
-    pdf: pd.DataFrame, run_ts: dt.datetime, legacy: bool
-) -> dict:
-    pdf = pdf.sort_values(["received_at", "event_key"], kind="mergesort")
-    duration = pdf["duration"].iloc[0]
-    has_duration = pd.notna(duration)
-    duration = float(duration) if has_duration else None
+def watch_step(state: tuple, rows, duration, legacy: bool) -> tuple:
+    """The reference's lag-1 watch-time transition
+    (process_wistia_data_v2.py:402-465), the one Python copy.
 
-    names = pdf["event_name"]
-    pcts = pdf["pct"]
-    n_play = int((names == "play").sum())
-    any_progress = bool((pcts > 0).any())
+    ``state`` is ``(anchor_us, last_pct, total)``, anchor ``None``
+    until tracking starts; ``rows`` yields ``(ts_us, pct, name)`` in
+    (received_at, event_key) order. NaN-pct rows are invisible to the
+    chain. A group without a positive duration never credits.
+    ``elapsed`` is one correctly-rounded division of the integer µs
+    delta, so every caller computes the same double."""
+    anchor, last_pct, total = state
+    if duration is None or not duration > 0:
+        return state
+    for ts, pct, name in rows:
+        if pct != pct:
+            continue
+        if anchor is None:
+            if pct > 0 or name == "play":
+                anchor, last_pct = ts, pct
+            continue
+        elapsed = (ts - anchor) / 1e6
+        if elapsed > 0 and pct > last_pct:
+            if name not in ("pause", "end"):
+                change = pct - last_pct
+                expected = (change / 100.0 if legacy else change) * duration
+                total += min(elapsed, expected)
+            anchor, last_pct = ts, pct
+        elif pct > last_pct + 0.01 or (elapsed > 0 and pct <= last_pct):
+            anchor, last_pct = ts, pct
+    return anchor, last_pct, total
+
+
+def watch_finish(n_play: int, any_progress: bool, duration, total: float):
+    """Close a folded group: play count with the any-progress fallback
+    (Q1), the duration cap, zeroing when nothing played, HALF_UP
+    rounding. Returns ``(play_count, total_watch_time, play_rate)``."""
     play_count = n_play if n_play > 0 else (1 if any_progress else 0)
-
-    total = 0.0
-    last_time = None
-    last_pct = 0.0
-    if has_duration and duration > 0:
-        for ts, pct, name in zip(pdf["received_at"], pcts, names):
-            if pd.isna(ts) or pd.isna(pct):
-                continue
-            pct = float(pct)
-            if last_time is None and (pct > 0 or name == "play"):
-                last_time = ts
-                last_pct = pct
-            elif last_time is not None:
-                elapsed = (ts - last_time).total_seconds()
-                if elapsed > 0 and pct > last_pct:
-                    if name not in ("pause", "end"):
-                        change = pct - last_pct
-                        expected = (change / 100.0 if legacy else change) * duration
-                        total += min(elapsed, expected)
-                    last_pct = pct
-                    last_time = ts
-                elif pct > last_pct + 0.01:
-                    last_pct = pct
-                    last_time = ts
-                elif elapsed > 0 and pct <= last_pct:
-                    last_pct = pct
-                    last_time = ts
-    if has_duration:
-        total = min(total, duration)
-
-    play_rate = 0.0
-    if has_duration and duration > 0 and total > 0:
-        play_rate = _round2(total / duration)
     if play_count == 0:
-        total = 0.0
-        play_rate = 0.0
-
-    ip = None
-    country = None
-    for i_, c_ in zip(pdf["ip"], pdf["country"]):
-        if ip is None and isinstance(i_, str) and i_:
-            ip = i_
-        if country is None and isinstance(c_, str) and c_:
-            country = c_
-        if ip is not None and country is not None:
-            break
-
-    return {
-        "media_id": pdf["media_id"].iloc[0],
-        "visitor_id": pdf["visitor_id"].iloc[0],
-        "date": pdf["date"].iloc[0],
-        "play_count": play_count,
-        "total_watch_time": _round2(total),
-        # all-null pct must surface as NULL (window parity: F.max
-        # skips nulls), never as NaN leaking out of pandas
-        "max_percent_viewed": (
-            float(pcts.max())
-            if len(pcts) and pd.notna(pcts.max())
-            else None
-        ),
-        "play_rate": play_rate,
-        "event_timestamp": pdf["received_at"].iloc[0],
-        "last_event_timestamp": pdf["received_at"].iloc[-1],
-        "ip": ip,
-        "country": country,
-        "ingestion_timestamp": run_ts,
-    }
+        return 0, 0.0, 0.0
+    if duration is not None:
+        total = min(total, duration)
+    play_rate = 0.0
+    if duration is not None and duration > 0 and total > 0:
+        play_rate = _round2(total / duration)
+    return play_count, _round2(total), play_rate
 
 
-def _fold_groups_arrays(
-    pdf: pd.DataFrame,
-    bounds,
-    run_ts: dt.datetime,
-    legacy: bool,
-) -> pd.DataFrame:
-    """Array fast path of the per-group fold for KEY-SORTED batches
-    (the partition-scan formulation only): the same state-machine
-    operation sequence as ``_fold_group``, executed over numpy arrays
-    extracted ONCE per batch instead of a pandas slice per group.
+def _first_text(values) -> str | None:
+    return next((v for v in values if isinstance(v, str) and v), None)
 
-    ``_fold_group``'s per-group cost is ~1.2 ms of pandas fixed
-    overhead (a stable sort, ``.iloc`` frame construction, Series ops
-    on 2-3 element groups) — at visitor-day grain that is ~50
-    CPU-seconds per 100k events (measured, r11). This path drops it
-    ~40× by never constructing a per-group object.
 
-    Semantics notes (each pinned by the three-formulation equivalence
-    tests and the driver oracle):
-
-    - No per-group re-sort: the scan's exchange already sorted rows
-      by (…, received_at, event_key), so ``_fold_group``'s stable
-      mergesort is an identity there — and trusting the EXCHANGE's
-      ordering is exactly what the window formulation's
-      ``orderBy("received_at", "event_key")`` does, so the two
-      formulations now share one ordering authority.
-    - ``elapsed`` replicates ``Timedelta.total_seconds`` exactly: the
-      integer tick delta divided (one correctly-rounded int/int true
-      division) by the timestamp unit's per-second factor.
-    - The output frame is assembled from the same row-dict list as
-      before (same dtype inference, same None/NaN surface), only the
-      dict VALUES come from arrays.
-    """
-    import numpy as np
-
-    media = pdf["media_id"].to_numpy(dtype=object)
-    visitor = pdf["visitor_id"].to_numpy(dtype=object)
-    datev = pdf["date"].to_numpy(dtype=object)
+def _fold_groups(pdf: pd.DataFrame, bounds, run_ts: dt.datetime, legacy: bool):
+    """One fact row per key-group ``pdf[bounds[i]:bounds[i + 1]]`` of
+    an event-time-sorted frame. Columns are extracted once per call,
+    so a group costs no pandas object (a per-group slice cost ~1.2 ms
+    of fixed overhead, ~50 CPU-s per 100k events at visitor-day grain,
+    r11). The first non-empty ip/country is the sorted-first one."""
     recv = pdf["received_at"].to_numpy()
-    unit = np.datetime_data(recv.dtype)[0]
-    div = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit]
-    recv_i = recv.view("int64")
-    recv_nat = np.isnat(recv)
-    pct = pdf["pct"].to_numpy(dtype="float64")
-    names = pdf["event_name"].to_numpy(dtype=object)
-    ips = pdf["ip"].to_numpy(dtype=object)
-    countries = pdf["country"].to_numpy(dtype=object)
-    dur = pdf["duration"].to_numpy(dtype="float64")
+    ts_us = recv.astype("datetime64[us]").view("int64").tolist()
+    pct = pdf["pct"].to_numpy(dtype="float64").tolist()
+    names = pdf["event_name"].tolist()
+    dur = pdf["duration"].to_numpy(dtype="float64").tolist()
+    ips, countries = pdf["ip"].tolist(), pdf["country"].tolist()
+    keys = pdf[["media_id", "visitor_id", "date"]].to_numpy(dtype=object)
 
     rows = []
     for a, b in zip(bounds[:-1], bounds[1:]):
-        duration = float(dur[a])
-        has_duration = duration == duration  # pd.notna on a float
-
-        n_play = 0
-        any_progress = False
-        pmax = None
-        for i in range(a, b):
-            if names[i] == "play":
-                n_play += 1
-            p = pct[i]
-            if p == p:  # not NaN — Series.max / (pcts > 0) skip NaN
-                if p > 0:
-                    any_progress = True
-                if pmax is None or p > pmax:
-                    pmax = float(p)
-        play_count = n_play if n_play > 0 else (1 if any_progress else 0)
-
-        total = 0.0
-        last_i = -1
-        last_pct = 0.0
-        if has_duration and duration > 0:
-            for i in range(a, b):
-                if recv_nat[i] or pct[i] != pct[i]:
-                    continue
-                p = float(pct[i])
-                if last_i < 0 and (p > 0 or names[i] == "play"):
-                    last_i = i
-                    last_pct = p
-                elif last_i >= 0:
-                    elapsed = (int(recv_i[i]) - int(recv_i[last_i])) / div
-                    if elapsed > 0 and p > last_pct:
-                        if names[i] not in ("pause", "end"):
-                            change = p - last_pct
-                            expected = (
-                                change / 100.0 if legacy else change
-                            ) * duration
-                            total += min(elapsed, expected)
-                        last_pct = p
-                        last_i = i
-                    elif p > last_pct + 0.01:
-                        last_pct = p
-                        last_i = i
-                    elif elapsed > 0 and p <= last_pct:
-                        last_pct = p
-                        last_i = i
-        if has_duration:
-            total = min(total, duration)
-
-        play_rate = 0.0
-        if has_duration and duration > 0 and total > 0:
-            play_rate = _round2(total / duration)
-        if play_count == 0:
-            total = 0.0
-            play_rate = 0.0
-
-        ip = None
-        country = None
-        for i in range(a, b):
-            i_, c_ = ips[i], countries[i]
-            if ip is None and isinstance(i_, str) and i_:
-                ip = i_
-            if country is None and isinstance(c_, str) and c_:
-                country = c_
-            if ip is not None and country is not None:
-                break
-
+        duration = dur[a] if dur[a] == dur[a] else None
+        seen = [p for p in pct[a:b] if p == p]
+        _, _, total = watch_step(
+            (None, 0.0, 0.0), zip(ts_us[a:b], pct[a:b], names[a:b]),
+            duration, legacy,
+        )
+        play_count, watch, rate = watch_finish(
+            names[a:b].count("play"), any(p > 0 for p in seen), duration, total
+        )
         rows.append(
             {
-                "media_id": media[a],
-                "visitor_id": visitor[a],
-                "date": datev[a],
+                "media_id": keys[a, 0],
+                "visitor_id": keys[a, 1],
+                "date": keys[a, 2],
                 "play_count": play_count,
-                "total_watch_time": _round2(total),
-                "max_percent_viewed": pmax,
-                "play_rate": play_rate,
+                "total_watch_time": watch,
+                # all-null pct surfaces as NULL (window parity: F.max
+                # skips nulls), never as NaN
+                "max_percent_viewed": max(seen, default=None),
+                "play_rate": rate,
                 "event_timestamp": pd.Timestamp(recv[a]),
                 "last_event_timestamp": pd.Timestamp(recv[b - 1]),
-                "ip": ip,
-                "country": country,
+                "ip": _first_text(ips[a:b]),
+                "country": _first_text(countries[a:b]),
                 "ingestion_timestamp": run_ts,
             }
         )
@@ -456,17 +340,22 @@ def fact_media_engagement_fold(
 ) -> DataFrame:
     """Sequential-fold implementation via grouped-map applyInPandas.
 
-    One Arrow batch per (media, visitor, date) group; the state machine
-    is the reference's, verbatim in semantics. Used as the correctness
-    oracle for the window formulation and for golden tests; also the
-    fallback if a future semantics change stops being lag-1.
+    One Arrow batch per (media, visitor, date) group, sorted by
+    (received_at, event_key) and folded as one range; the state
+    machine is the reference's, verbatim in semantics. Used as the
+    correctness oracle for the window formulation and for golden
+    tests; also the fallback if a future semantics change stops being
+    lag-1.
     """
     e = _fold_input(events, dim_media)
 
     legacy = legacy_percent_semantics
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame([_fold_group(pdf, run_ts, legacy)])
+        pdf = pdf.sort_values(
+            ["received_at", "event_key"], kind="mergesort", ignore_index=True
+        )
+        return _fold_groups(pdf, [0, len(pdf)], run_ts, legacy)
 
     return e.groupBy("media_id", "visitor_id", "date").applyInPandas(
         fold, FACT_OUTPUT_SCHEMA
@@ -487,11 +376,13 @@ def fact_media_engagement_fold_scan(
     which at visitor-day grain means billions of tiny Arrow slices —
     per-group conversion overhead dominates the fold itself ~10×.
     Here the plan is repartition-by-key + sortWithinPartitions + one
-    ``mapInPandas`` pass that slices contiguous groups out of each
-    Arrow batch, so conversion cost is per-BATCH while state still
-    never crosses a group boundary (groups can span batches WITHIN a
-    partition — a carry buffer stitches them; they cannot span
-    partitions, the shuffle hashes the full group key).
+    ``mapInPandas`` pass of ``_scan.group_carry_scan``, so conversion
+    cost is per-BATCH while state still never crosses a group
+    boundary (groups can span batches WITHIN a partition — the carry
+    stitches them; they cannot span partitions, the shuffle hashes
+    the full group key). The scan's exchange already sorted each
+    group by (received_at, event_key), the ordering the window
+    formulation's ``orderBy`` trusts too, so groups fold unsorted.
 
     ``dedup_event_rows=True`` resolves duplicate ``(received_at,
     event_key)`` rows deterministically BEFORE the fold, keeping the
@@ -501,61 +392,32 @@ def fact_media_engagement_fold_scan(
     them — the sort gains two tie-break columns and the scan drops
     repeats, zero extra shuffles (review r05: the first cut paid a
     second full window exchange for what is a no-op on unique-id
-    corpora). Matches a SQL ``QUALIFY row_number() OVER (PARTITION BY
-    key, received_at, event_key ORDER BY pct ASC NULLS LAST, name ASC
-    NULLS LAST) = 1``.
+    corpora). The drop runs per carried batch of COMPLETE groups,
+    which always holds every duplicate of its rows. Matches a SQL
+    ``QUALIFY row_number() OVER (PARTITION BY key, received_at,
+    event_key ORDER BY pct ASC NULLS LAST, name ASC NULLS LAST) = 1``.
     """
+    from ._scan import group_bounds, group_carry_scan, pinned_partitions
+
     e = _fold_input(events, dim_media)
     keys = ["media_id", "visitor_id", "date"]
     legacy = legacy_percent_semantics
     dedup_subset = [*keys, "received_at", "event_key"]
 
+    def fold_groups(pdf: pd.DataFrame) -> pd.DataFrame:
+        if dedup_event_rows:
+            # rows arrive sorted (…, received_at, event_key, pct
+            # nulls-last, name nulls-last), so keep-first == the
+            # (pct, name)-least row
+            pdf = pdf.drop_duplicates(subset=dedup_subset, ignore_index=True)
+        return _fold_groups(pdf, group_bounds(pdf, keys), run_ts, legacy)
+
     def scan(batches):
-        import numpy as np
-
-        def key_codes(pdf: pd.DataFrame) -> np.ndarray:
-            # group id per row; factorize keeps first-seen order, and
-            # rows arrive key-sorted, so codes are non-decreasing
-            return pd.MultiIndex.from_arrays(
-                [pdf[k] for k in keys]
-            ).factorize()[0]
-
-        def fold_groups(pdf: pd.DataFrame, codes: np.ndarray) -> pd.DataFrame:
-            starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-            bounds = np.r_[starts, len(pdf)]
-            # array fast path: batches arrive key-sorted, so the
-            # per-group pandas fold's stable re-sort is an identity —
-            # see _fold_groups_arrays for the equivalence argument
-            return _fold_groups_arrays(pdf, bounds, run_ts, legacy)
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if dedup_event_rows and len(pdf):
-                # rows arrive sorted (…, received_at, event_key, pct
-                # nulls-last, name nulls-last), so keep-first == the
-                # (pct, name)-least row; re-running over the carried
-                # tail catches duplicate pairs split across batches
-                pdf = pdf.drop_duplicates(
-                    subset=dedup_subset, ignore_index=True
-                )
-            if not len(pdf):
-                continue
-            codes = key_codes(pdf)
-            tail = int(np.flatnonzero(codes == codes[-1])[0])
-            carry = pdf.iloc[tail:]
-            if tail:
-                yield fold_groups(pdf.iloc[:tail], codes[:tail])
-        if carry is not None and len(carry):
-            yield fold_groups(carry, key_codes(carry))
+        yield from group_carry_scan(batches, keys, fold_groups)
 
     # explicit partition count: a bare repartition(cols) exchange is
     # fair game for AQE coalescing, which at small SF collapses to ONE
     # partition and serializes the Python fold (see _scan.py)
-    from ._scan import pinned_partitions
-
     n_part = pinned_partitions(events)
     sort_cols: list = [*keys, "received_at", "event_key"]
     if dedup_event_rows:

@@ -26,6 +26,8 @@ import math
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ._scan import group_bounds
+
 # Decimal digits of summation room the quantized time-decay path
 # reserves below decimal(38,q) capacity; windows with more than
 # 10^DECAY_SUM_HEADROOM touch weights flag decay_overflow instead.
@@ -1198,7 +1200,7 @@ def _holt_scan(
     from ._scan import group_carry_scan, pinned_partitions
 
     def scan(batches):
-        yield from group_carry_scan(batches, key_col, fold_groups)
+        yield from group_carry_scan(batches, [key_col], fold_groups)
 
     return (
         prepared.repartition(pinned_partitions(prepared), F.col(key_col))
@@ -1273,12 +1275,10 @@ def holt_linear(
     )
 
     def fold_groups(pdf):
-        import numpy as np
         import pandas as pd
 
         ks = pdf[key_col].values
-        starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
-        bounds = np.r_[starts, len(pdf)]
+        bounds = group_bounds(pdf, [key_col])
         days = pdf[day_col].values
         xs_all = pdf["_x"].values
         ns = pdf["_n"].values
@@ -1337,12 +1337,10 @@ def holt_backtest(
     )
 
     def fold_groups(pdf):
-        import numpy as np
         import pandas as pd
 
         ks = pdf[key_col].values
-        starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
-        bounds = np.r_[starts, len(pdf)]
+        bounds = group_bounds(pdf, [key_col])
         xs_all = pdf["_x"].values
         out = []
         for a, b in zip(bounds[:-1], bounds[1:]):

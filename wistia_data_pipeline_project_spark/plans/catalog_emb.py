@@ -2657,8 +2657,10 @@ def emb_ood_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the centroid table (|labels| x dim = 640 rows) has TWO consumers
     # (its own norm aggregate and the broadcast join into the per-dim
-    # stream) and the scored table has two more (the percentile pick
-    # and the flag aggregate); without the entry-local caches each
+    # stream), and the scored table — corpus grain, one row per
+    # vector — has two more (the percentile pick and the flag
+    # aggregate), so the second cache holds a corpus-sized table;
+    # without the entry-local caches each
     # consumer re-ran the corpus posexplode from the scan — measured
     # 16 static Exchanges / 6 scans collapsing to 7 / 2 (r12,
     # plans/r12/emb_ood_detect_{before,after}.txt)

@@ -954,7 +954,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order-function lambdas evaluate INTERPRETED and allocate
     # the full m×m struct array per basket before filtering; the
     # Generate form allocates nothing and stays in whole-stage codegen
-    # (measured r12: entry 1.78 → see OPTIMIZATION_r12.md).
+    # (r12; before/after plans in plans/r12/orders_market_basket_*.txt).
     return (
         baskets.select(
             "_parts", F.posexplode("_parts").alias("_i", "part_a")
@@ -1015,9 +1015,11 @@ def nation_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts under it at driver SFs; revenue is PRE-AGGREGATED to
     (custkey, year) BEFORE the customer join (guide §2.3 — the r12
     rewrite: the previous shape shuffled the full lineitem-grain rows
-    into a customer SortMergeJoin; now the join input is bounded by
-    |customers|×|years| partials, 4 exchanges → 3 with the fact-grain
-    one gone), customer⋈nation is a broadcast chain; the trend window
+    into a customer join; now the join input is bounded by
+    |customers|×|years| partials). This ADDS one exchange — the
+    partial aggregate's (custkey, year) shuffle; pinned shuffle
+    exchanges 2 → 3 — but each shuffles far fewer rows than the
+    fact-grain one did. customer⋈nation is a broadcast chain; the trend window
     partitions by nation over the AGGREGATED (nation, year) table —
     tiny. Both aggs are map-side combinable.
     """

@@ -1707,8 +1707,8 @@ def events_volume_anomaly_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Full SQL replay of the reference's lag-1 watch-time state machine
-# (fact._fold_group / streaming.pipeline's fold — the shared stateful
-# semantics): per (media, visitor, date) ordered by (received_at,
+# (fact.watch_step, the one Python copy the batch folds and the
+# streaming twin share): per (media, visitor, date) ordered by (received_at,
 # event_key), a recursive CTE carries (anchor_ts, last_pct, running
 # credit) row to row, crediting min(elapsed, Δpct·duration) on forward
 # progress outside pause/end. The anchor-update condition collapses to
@@ -1716,9 +1716,12 @@ def events_volume_anomaly_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ascending ts, so ts < anchor is impossible — the three Python
 # branches partition exactly that disjunction). All float ops are
 # written in the fold's exact sequence (one elapsed division, one
-# Δpct·duration product, sequential += in recursion order), and
-# _round2's shortest-repr HALF_UP is CAST(CAST(x AS VARCHAR) AS
-# DECIMAL) — verified identical to Decimal(repr(x)).quantize(HALF_UP).
+# Δpct·duration product, sequential += in recursion order).
+# fact._round2's shortest-repr HALF_UP is CAST(CAST(x AS VARCHAR) AS
+# DECIMAL), except below 0.005: DuckDB 1.0.0 writes doubles under 1e-4
+# in exponent form and casts those strings to DECIMAL wrongly
+# ('9.5e-05' gives 0.01, '0.0000999' gives 0.00), so such values go to
+# 0.0 first — what HALF_UP gives any value below 0.005.
 STATEFUL_WATCH_SQL = """
     WITH RECURSIVE ev AS (
       SELECT 'm' || CAST(user_id % 7 AS VARCHAR) AS media_id,
@@ -1812,11 +1815,12 @@ STATEFUL_WATCH_SQL = """
     SELECT media_id, visitor_id,
            CAST(date AS TIMESTAMP) AS date,
            CAST(play_count AS BIGINT) AS play_count,
-           CASE WHEN play_count = 0 THEN 0.0
+           CASE WHEN play_count = 0 OR capped < CAST(0.005 AS DOUBLE) THEN 0.0
                 ELSE CAST(CAST(CAST(capped AS VARCHAR) AS DECIMAL(30,2))
                           AS DOUBLE) END AS total_watch_time,
            max_pct AS max_percent_viewed,
-           CASE WHEN play_count = 0 OR capped <= 0 THEN 0.0
+           CASE WHEN play_count = 0 OR capped <= 0
+                     OR capped / duration < CAST(0.005 AS DOUBLE) THEN 0.0
                 ELSE CAST(CAST(CAST(capped / duration AS VARCHAR)
                                AS DECIMAL(30,2)) AS DOUBLE)
            END AS play_rate,

@@ -9,10 +9,16 @@ Mapping:
 - re-run duplicate risk (+1 s overlap) → ``dropDuplicatesWithinWatermark``
   on the unique event key
 - daily grain of the fact             → tumbling ``F.window(ts, '1 day')``
-- per-group sequential watch-time     → planned as
-  ``transformWithStateInPandas`` (lag-1 state per key, event-time
-  timeout at watermark + 1 day); round-2 item — the batch fold is the
-  semantic spec.
+- per-group sequential watch-time     → ``applyInPandasWithState``
+  (``streaming_watch_time``): the batch fold's own state machine
+  (``fact.watch_step``) carried per key across micro-batches,
+  event-time timeout at the key's day + 2.
+
+The order-sensitive twins share one commit discipline
+(``_commit_split``): a row folds into committed state only once it is
+strictly below the watermark; later rows buffer in state and fold
+provisionally on a copy. The day-grain twins (EWMA, Holt) share one
+step (``_closed_day_step``).
 
 Scale: the streaming agg state is keyed by (media, visitor, day);
 the watermark bounds state size (day windows close 1 day after the
@@ -22,15 +28,36 @@ production would swap in Kafka with identical plan shape.
 
 from __future__ import annotations
 
+import bisect
 import datetime as dt
+import math
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.fact import _round2
+from ..operators.fact import watch_finish, watch_step
+
+
+def _commit_split(
+    pending: list, wm_us, order=itemgetter(0, 1), event_us=itemgetter(0)
+):
+    """The strict-watermark commit discipline of the sequential twins:
+    sort ``pending`` by ``order`` (event time first, then the twin's
+    tiebreak) and split it into the rows STRICTLY below the watermark
+    — no earlier row can still arrive, so their fold order is final —
+    and the rest, which stay buffered and fold only provisionally.
+    Strict because Spark still DELIVERS rows whose event time equals
+    the watermark (only < wm is dropped as late): a ts == wm row with
+    an earlier tiebreak can arrive in a later micro-batch, and
+    committing at == wm would fold it after its successors
+    (reproduced live). Returns ``(committed, pending)``."""
+    pending = sorted(pending, key=order)
+    n = bisect.bisect_left(pending, wm_us, key=event_us)
+    return pending[:n], pending[n:]
 
 
 def streaming_daily_engagement(
@@ -234,14 +261,15 @@ def streaming_watch_time(
     """Per-(media, visitor, day) watch-time over an event stream:
     ``applyInPandasWithState`` carrying the batch fold's lag-1 state
     (anchor timestamp + last percent + running credit) across
-    micro-batches.
+    micro-batches, advanced by the batch fold's own ``fact.watch_step``
+    and closed by its ``fact.watch_finish``.
 
     Semantics match ``fact.fact_media_engagement_fold`` for ANY
     arrival order within the watermark: the order-sensitive lag-1
-    fold only COMMITS events once the watermark has passed them (no
-    earlier event can still arrive), so cross-batch disorder cannot
-    corrupt the anchor state. Still-pending rows (ts > watermark) are
-    buffered in state and folded PROVISIONALLY — each update-mode
+    fold only COMMITS events once the watermark has passed them
+    (``_commit_split``), so cross-batch disorder cannot corrupt the
+    anchor state. Still-pending rows are buffered in state and folded
+    PROVISIONALLY on a copy — each update-mode
     emission reflects all data seen so far in event-time order, and
     the final emission (at the eviction timeout) equals the batch
     fold. Order-insensitive stats (play counts, max percent,
@@ -283,52 +311,8 @@ def streaming_watch_time(
     )
     legacy = legacy_percent_semantics
 
-    def fold(events, last_time_us, last_pct, total, duration):
-        """The reference's lag-1 state machine over (ts_us, key, pct,
-        name) tuples ALREADY sorted by event time."""
-        if not (duration and duration > 0):
-            return last_time_us, last_pct, total
-        for ts_us, _k, pct, name in events:
-            if last_time_us is None and (pct > 0 or name == "play"):
-                last_time_us, last_pct = ts_us, pct
-            elif last_time_us is not None:
-                elapsed = (ts_us - last_time_us) / 1e6
-                if elapsed > 0 and pct > last_pct:
-                    if name not in ("pause", "end"):
-                        change = pct - last_pct
-                        expected = (change / 100.0 if legacy else change) * duration
-                        total += min(elapsed, expected)
-                    last_pct, last_time_us = pct, ts_us
-                elif pct > last_pct + 0.01:
-                    last_pct, last_time_us = pct, ts_us
-                elif elapsed > 0 and pct <= last_pct:
-                    last_pct, last_time_us = pct, ts_us
-        return last_time_us, last_pct, total
-
-    def emit(key, n_play, any_progress, max_pct, first_ts_us, last_ts_us,
-             duration, total):
-        play_count = n_play if n_play > 0 else (1 if any_progress else 0)
-        capped = min(total, duration) if duration is not None else total
-        if play_count == 0:
-            capped = 0.0
-        to_ts = lambda us: None if us is None else pd.to_datetime(us, unit="us")  # noqa: E731
-        return pd.DataFrame(
-            [
-                {
-                    "media_id": key[0],
-                    "visitor_id": key[1],
-                    "date": key[2],
-                    "play_count": play_count,
-                    # HALF_UP like the batch fold (fact._round2);
-                    # built-in round() is half-to-even and diverges on
-                    # exact halves, breaking stream/batch parity
-                    "total_watch_time": _round2(capped),
-                    "max_percent_viewed": max_pct,
-                    "event_timestamp": to_ts(first_ts_us),
-                    "last_event_timestamp": to_ts(last_ts_us),
-                }
-            ]
-        )
+    def chain(pending):
+        return ((ts_us, pct, name) for ts_us, _k, pct, name in pending)
 
     def step(
         key: tuple,
@@ -336,29 +320,17 @@ def streaming_watch_time(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            (last_time_us, last_pct, total, n_play, any_progress, max_pct,
+            (anchor, last_pct, total, n_play, any_progress, max_pct,
              first_ts_us, last_ts_us, duration,
              buf_ts, buf_key, buf_pct, buf_name) = state.get
             pending = list(zip(buf_ts, buf_key, buf_pct, buf_name))
         else:
-            last_time_us, last_pct, total = None, 0.0, 0.0
+            anchor, last_pct, total = None, 0.0, 0.0
             # max_pct None until a non-null pct arrives (batch-fold
             # parity: all-null groups emit NULL, not 0.0)
             n_play, any_progress, max_pct = 0, False, None
             first_ts_us, last_ts_us, duration = None, None, None
             pending = []
-
-        if state.hasTimedOut:
-            # the watermark passed the whole day + lateness: everything
-            # left pending is final — fold it and emit the closing row
-            pending.sort(key=lambda r: (r[0], r[1] or ""))  # event_key may be NULL
-            last_time_us, last_pct, total = fold(
-                pending, last_time_us, last_pct, total, duration
-            )
-            state.remove()
-            yield emit(key, n_play, any_progress, max_pct, first_ts_us,
-                       last_ts_us, duration, total)
-            return
 
         for rows in pdfs:
             for ts, ekey, pct, name, dur in zip(
@@ -388,47 +360,53 @@ def streaming_watch_time(
                     (ts_us, ekey, float(pct), None if pd.isna(name) else name)
                 )
 
-        # COMMIT the prefix the watermark has passed: no earlier event
-        # can arrive anymore, so its fold order is final. Later rows
-        # stay buffered (they may still be preceded by in-flight data).
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        pending.sort(key=lambda r: (r[0], r[1] or ""))  # event_key may be NULL
-        n_final = 0
-        # STRICTLY before the watermark: Spark still DELIVERS rows
-        # whose event time equals the watermark (only < wm is dropped
-        # as late), so a ts == wm row with an earlier tiebreak can
-        # arrive in a later micro-batch — committing at == wm would
-        # fold it after its successors (review r07, reproduced live)
-        while n_final < len(pending) and pending[n_final][0] < wm_us:
-            n_final += 1
-        last_time_us, last_pct, total = fold(
-            pending[:n_final], last_time_us, last_pct, total, duration
-        )
-        pending = pending[n_final:]
+        # a timed-out key: the watermark passed the whole day +
+        # lateness, so everything pending is final — commit it all and
+        # emit the closing row
+        timed_out = state.hasTimedOut
+        wm_us = math.inf if timed_out else state.getCurrentWatermarkMs() * 1000
+        # event_key may be NULL
+        done, pending = _commit_split(pending, wm_us, order=lambda r: (r[0], r[1] or ""))
+        committed = watch_step((anchor, last_pct, total), chain(done), duration, legacy)
+        if timed_out:
+            state.remove()
+        else:
+            state.update(
+                (*committed, n_play, any_progress, max_pct,
+                 first_ts_us, last_ts_us, duration,
+                 [p[0] for p in pending], [p[1] for p in pending],
+                 [p[2] for p in pending], [p[3] for p in pending])
+            )
+            # evict when the watermark passes the key's day + 2 (built
+            # in UTC explicitly: naive datetime.timestamp() would shift
+            # by the host TZ); the timeout must sit strictly past the
+            # watermark
+            evict_at = dt.datetime.combine(
+                key[2], dt.time(), tzinfo=dt.timezone.utc
+            ) + dt.timedelta(days=2)
+            state.setTimeoutTimestamp(
+                max(int(evict_at.timestamp() * 1000), state.getCurrentWatermarkMs() + 1)
+            )
 
-        state.update(
-            (last_time_us, last_pct, total, n_play, any_progress, max_pct,
-             first_ts_us, last_ts_us, duration,
-             [p[0] for p in pending], [p[1] for p in pending],
-             [p[2] for p in pending], [p[3] for p in pending])
+        # provisional view: committed state + pending folded on a copy
+        # (event-time order), so every emission reflects all data
+        _, _, prov_total = watch_step(committed, chain(pending), duration, legacy)
+        play_count, watch, _ = watch_finish(n_play, any_progress, duration, prov_total)
+        to_ts = lambda us: None if us is None else pd.to_datetime(us, unit="us")  # noqa: E731
+        yield pd.DataFrame(
+            [
+                {
+                    "media_id": key[0],
+                    "visitor_id": key[1],
+                    "date": key[2],
+                    "play_count": play_count,
+                    "total_watch_time": watch,
+                    "max_percent_viewed": max_pct,
+                    "event_timestamp": to_ts(first_ts_us),
+                    "last_event_timestamp": to_ts(last_ts_us),
+                }
+            ]
         )
-        # evict when the watermark passes the key's day + 2 (built in
-        # UTC explicitly: naive datetime.timestamp() would shift by the
-        # host TZ); the timeout must sit strictly past the watermark
-        day = key[2]
-        evict_at = (
-            dt.datetime.combine(day, dt.time(), tzinfo=dt.timezone.utc)
-            + dt.timedelta(days=2)
-        )
-        state.setTimeoutTimestamp(
-            max(int(evict_at.timestamp() * 1000), state.getCurrentWatermarkMs() + 1)
-        )
-
-        # provisional view: committed fold state + pending folded on a
-        # copy (event-time order), so every emission reflects all data
-        _, _, prov_total = fold(pending, last_time_us, last_pct, total, duration)
-        yield emit(key, n_play, any_progress, max_pct, first_ts_us,
-                   last_ts_us, duration, prov_total)
 
     return e.groupBy("media_id", "visitor_id", "date").applyInPandasWithState(
         step,
@@ -638,11 +616,8 @@ def streaming_counter_delta(
     """Streaming twin of ``timeseries.counter_delta`` (reset-aware
     counter aggregation per user): ``applyInPandasWithState``
     carrying the lag-1 fold state (previous committed reading +
-    running delta/resets) across micro-batches, with the
-    watch-time commit discipline — the order-sensitive fold only
-    COMMITS readings once the watermark has passed them (no earlier
-    reading can still arrive), later readings buffer in state and
-    fold PROVISIONALLY on a copy, so every update-mode emission
+    running delta/resets) across micro-batches under the
+    ``_commit_split`` discipline, so every update-mode emission
     reflects all data seen so far in event-time order and the final
     emission equals the batch operator.
 
@@ -658,14 +633,7 @@ def streaming_counter_delta(
     ``(ts, event_id)``.
     """
     e = (
-        events_stream.filter(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan(F.col("value"))
-            & (F.abs(F.col("value")) < F.lit(1e9))
-        )
-        .withWatermark("ts", watermark)
+        _valid_readings(events_stream, watermark)
         .select(
             "user_id",
             # ts itself must SURVIVE the projection: the watermark is
@@ -680,13 +648,12 @@ def streaming_counter_delta(
             F.coalesce(
                 F.col("event_id").cast("long"), F.lit(-(2**63))
             ).alias("event_id"),
-            (F.col("value").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
+            _cents(),
         )
     )
 
-    def fold(rows, prev, delta, resets, n, first):
+    def fold(rows, acc):
+        prev, delta, resets, n, first = acc
         for _, _, c in rows:
             n += 1
             if prev is None:
@@ -703,40 +670,25 @@ def streaming_counter_delta(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            (prev, delta, resets, n, first,
-             p_ts, p_eid, p_cents) = state.get
+            *acc, p_ts, p_eid, p_cents = state.get
             pending = list(zip(p_ts, p_eid, p_cents))
         else:
-            prev = first = None
-            delta = resets = n = 0
-            pending = []
-        if state.hasTimedOut:  # pragma: no cover - no timeout is set
-            state.remove()
-            return
+            acc, pending = (None, 0, 0, 0, None), []
         for pdf in pdfs:
-            for ts_us, eid, cents in zip(
-                pdf["ts_us"], pdf["event_id"], pdf["cents"]
-            ):
-                pending.append((int(ts_us), int(eid), int(cents)))
-        pending.sort(key=lambda r: (r[0], r[1]))
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        n_final = 0
-        # strictly < wm: rows AT the watermark can still arrive (same
-        # boundary as the watch-time fold above)
-        while n_final < len(pending) and pending[n_final][0] < wm_us:
-            n_final += 1
-        prev, delta, resets, n, first = fold(
-            pending[:n_final], prev, delta, resets, n, first
-        )
-        pending = pending[n_final:]
+            pending.extend(
+                (int(t), int(i), int(c))
+                for t, i, c in zip(pdf["ts_us"], pdf["event_id"], pdf["cents"])
+            )
+        done, pending = _commit_split(pending, state.getCurrentWatermarkMs() * 1000)
+        acc = fold(done, acc)
         state.update((
-            prev, delta, resets, n, first,
+            *acc,
             [p[0] for p in pending],
             [p[1] for p in pending],
             [p[2] for p in pending],
         ))
         # provisional: committed fold + pending folded on a copy
-        pv, pd_, pr, pn, pf = fold(pending, prev, delta, resets, n, first)
+        pv, pd_, pr, pn, pf = fold(pending, acc)
         if pn == 0:
             return
         yield pd.DataFrame(
@@ -785,14 +737,10 @@ def streaming_heartbeat_uptime(
     provisionally with ``tolerance`` (exactly the batch rule for the
     final beat).
 
-    Commit discipline: beats fold into committed state only once
-    STRICTLY older than the watermark (``< wm`` — a row AT the
-    watermark can still arrive; for this fold a same-timestamp
-    straggler is a zero-length step either way, but the strict bound
-    is the uniform discipline the counter regression pinned); newer
-    beats buffer in state and fold provisionally on a copy, so every
-    update-mode emission reflects all data seen so far in event-time
-    order and the final emission equals the batch operator.
+    Commit discipline: ``_commit_split`` (for this fold a
+    same-timestamp straggler is a zero-length step either way, but
+    the strict bound is the uniform discipline the counter regression
+    pinned).
 
     State lifecycle: like the counter twin, liveness series are
     long-lived registers — no event-time eviction; state is one
@@ -820,7 +768,8 @@ def streaming_heartbeat_uptime(
         )
     )
 
-    def fold(rows, first, prev, n, uptime_excl, breaks):
+    def fold(rows, acc):
+        first, prev, n, uptime_excl, breaks = acc
         for ts_us, _ in rows:
             n += 1
             if prev is None:
@@ -837,33 +786,22 @@ def streaming_heartbeat_uptime(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            first, prev, n, upx, breaks, p_ts, p_eid = state.get
+            *acc, p_ts, p_eid = state.get
             pending = list(zip(p_ts, p_eid))
         else:
-            first = prev = None
-            n = upx = breaks = 0
-            pending = []
-        if state.hasTimedOut:  # pragma: no cover - no timeout is set
-            state.remove()
-            return
+            acc, pending = (None, None, 0, 0, 0), []
         for pdf in pdfs:
-            for ts_us, eid in zip(pdf["ts_us"], pdf["event_id"]):
-                pending.append((int(ts_us), int(eid)))
-        pending.sort()
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        n_final = 0
-        while n_final < len(pending) and pending[n_final][0] < wm_us:
-            n_final += 1
-        first, prev, n, upx, breaks = fold(
-            pending[:n_final], first, prev, n, upx, breaks
-        )
-        pending = pending[n_final:]
+            pending.extend(
+                (int(t), int(i)) for t, i in zip(pdf["ts_us"], pdf["event_id"])
+            )
+        done, pending = _commit_split(pending, state.getCurrentWatermarkMs() * 1000)
+        acc = fold(done, acc)
         state.update((
-            first, prev, n, upx, breaks,
+            *acc,
             [p[0] for p in pending],
             [p[1] for p in pending],
         ))
-        pf, pp, pn, pupx, pbr = fold(pending, first, prev, n, upx, breaks)
+        pf, pp, pn, pupx, pbr = fold(pending, acc)
         if pn == 0:
             return
         uptime = pupx + tol  # close the open last-beat interval
@@ -917,12 +855,8 @@ def streaming_state_durations(
     the monotone sequence consumers (and the parity tests) use to pick
     the final emission per (user, state).
 
-    Commit discipline: rows fold into committed state only once
-    STRICTLY older than the watermark (``< wm``, the counter twin's
-    regression bound); newer rows buffer in state and fold
-    provisionally on a COPY of the accumulator map, so every
-    update-mode emission reflects all data seen so far in event-time
-    order and the final emission equals the batch operator.
+    Commit discipline: ``_commit_split``; the provisional fold runs
+    on a COPY of the accumulator map.
 
     State lifecycle: like the other register twins — one (prev, state)
     pair plus a bounded per-state accumulator list (|states| is small
@@ -970,26 +904,15 @@ def streaming_state_durations(
             prev_us = prev_state = None
             acc = {}
             pending = []
-        if state.hasTimedOut:  # pragma: no cover - no timeout is set
-            state.remove()
-            return
         for pdf in pdfs:
-            for ts_us, eid, st in zip(
-                pdf["ts_us"], pdf["event_id"], pdf["state"]
-            ):
-                pending.append((int(ts_us), int(eid), st))
-        pending.sort(key=lambda r: (r[0], r[1]))
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        n_final = 0
-        # strictly < wm: a row AT the watermark can still arrive, and
-        # HERE the bound is value-bearing — a same-timestamp straggler
-        # with an earlier tiebreak re-orders the LOCF chain
-        while n_final < len(pending) and pending[n_final][0] < wm_us:
-            n_final += 1
-        prev_us, prev_state = fold(
-            pending[:n_final], prev_us, prev_state, acc
-        )
-        pending = pending[n_final:]
+            pending.extend(
+                (int(t), int(i), st)
+                for t, i, st in zip(pdf["ts_us"], pdf["event_id"], pdf["state"])
+            )
+        # strictly < wm is value-bearing HERE: a same-timestamp
+        # straggler with an earlier tiebreak re-orders the LOCF chain
+        done, pending = _commit_split(pending, state.getCurrentWatermarkMs() * 1000)
+        prev_us, prev_state = fold(done, prev_us, prev_state, acc)
         sts = sorted(acc)
         state.update((
             prev_us, prev_state,
@@ -1025,6 +948,97 @@ def streaming_state_durations(
     )
 
 
+_DAY_US = 86_400_000_000
+
+
+def _valid_readings(events_stream: DataFrame, watermark: str) -> DataFrame:
+    """The value twins' input filter — the batch operators' NULL, NaN
+    and overflow guards — plus the ``ts`` watermark."""
+    return events_stream.filter(
+        F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
+        & F.col("value").isNotNull()
+        & ~F.isnan(F.col("value"))
+        & (F.abs(F.col("value")) < F.lit(1e9))
+    ).withWatermark("ts", watermark)
+
+
+def _cents():
+    """Readings quantized to integer cents, exactly as in batch."""
+    return (F.col("value").cast("decimal(12,2)") * 100).cast("long").alias("cents")
+
+
+def _daily_cents(events_stream: DataFrame, watermark: str) -> DataFrame:
+    """Per-row (day, cents) input of the closed-day twins; ``ts``
+    survives the projection as the watermark attribute."""
+    return _valid_readings(events_stream, watermark).select(
+        "user_id",
+        "ts",
+        F.unix_micros(F.date_trunc("DAY", F.col("ts"))).alias("day_us"),
+        _cents(),
+    )
+
+
+def _closed_day_step(keep: int, emit):
+    """The ``applyInPandasWithState`` step of the closed-day twins
+    (EWMA, Holt): commit discipline at DAY granularity. A day folds
+    into the committed deque only once the watermark has passed its
+    END (``day_end <= wm`` — a row AT the watermark belongs to a day
+    whose end is still ahead of it, so the strict row bound of
+    ``_commit_split`` is implied); open days accumulate in a pending
+    per-day partial-sum buffer and fold provisionally on a copy, so
+    every update-mode emission reflects all data seen so far in
+    event-time order. In-contract stragglers sit at/above the
+    watermark, so pending days are always newer than every committed
+    day. The deque keeps the last ``keep`` days; ``emit(days, n_days)``
+    maps the provisional ``(day_us, cents)`` deque to the twin's
+    output columns."""
+
+    def step(
+        key, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            n, n_obs, days, xs, p_days, p_xs = state.get
+            deque = list(zip(days, xs))
+            pending = dict(zip(p_days, p_xs))
+        else:
+            n, n_obs, deque, pending = 0, 0, [], {}
+        for pdf in pdfs:
+            for day_us, cents in zip(pdf["day_us"], pdf["cents"]):
+                d = int(day_us)
+                n_obs += 1
+                pending[d] = pending.get(d, 0) + int(cents)
+        wm_us = state.getCurrentWatermarkMs() * 1000
+        for d, x in sorted(pending.items()):
+            if d + _DAY_US <= wm_us:
+                n += 1
+                deque.append((d, pending.pop(d)))
+        deque = deque[-keep:]
+        pend = sorted(pending.items())
+        state.update((
+            n,
+            n_obs,
+            [d for d, _ in deque],
+            [x for _, x in deque],
+            [d for d, _ in pend],
+            [x for _, x in pend],
+        ))
+        pn, pdq = n + len(pend), (deque + pend)[-keep:]
+        if pn == 0:
+            return
+        yield pd.DataFrame(
+            [{
+                "user_id": key[0],
+                "n_days": pn,
+                "n_obs": n_obs,
+                "last_day": pd.to_datetime(pdq[-1][0], unit="us"),
+                **emit(pdq, pn),
+            }]
+        )
+
+    return step
+
+
 EWMA_STATE_SCHEMA = (
     "n_days long, n_obs long, days array<long>, xs array<long>, "
     "pend_days array<long>, pend_xs array<long>"
@@ -1036,7 +1050,6 @@ EWMA_OUTPUT_SCHEMA = (
 
 _EWMA_TRUNC_BITS = 24
 _EWMA_KEEP = _EWMA_TRUNC_BITS + 1  # all days that can carry weight
-_DAY_US = 86_400_000_000
 
 
 def streaming_ewma_smoothed(
@@ -1052,14 +1065,7 @@ def streaming_ewma_smoothed(
     and the final emission is bit-identical to the batch entry
     (same integer shift sum, same single IEEE division).
 
-    Commit discipline, at DAY granularity: a day folds into the
-    committed deque only once the watermark has passed its END
-    (``day_end <= wm`` — a row AT the watermark belongs to a day
-    whose end is still ahead of it, so the strict row bound of the
-    counter twin is implied); open days accumulate in a pending
-    per-day partial-sum buffer and fold provisionally on a copy, so
-    every update-mode emission reflects all data seen so far in
-    event-time order.
+    Commit discipline at DAY granularity: ``_closed_day_step``.
 
     ``n_days`` is non-decreasing but NOT strict (a late partial
     merges into an existing day), so every emission also carries
@@ -1070,29 +1076,8 @@ def streaming_ewma_smoothed(
     State lifecycle: one bounded deque per active user (25 longs) +
     the watermark-bounded pending buffer; no event-time eviction.
     """
-    e = (
-        events_stream.filter(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan(F.col("value"))
-            & (F.abs(F.col("value")) < F.lit(1e9))
-        )
-        .withWatermark("ts", watermark)
-        .select(
-            "user_id",
-            # ts survives the projection (watermark attribute)
-            "ts",
-            F.unix_micros(F.date_trunc("DAY", F.col("ts"))).alias(
-                "day_us"
-            ),
-            (F.col("value").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-    )
 
-    def ewma_from(deque, n):
+    def emit(deque, n):
         m = len(deque)
         total = 0
         for j, (_d, x) in enumerate(deque, start=1):
@@ -1100,64 +1085,12 @@ def streaming_ewma_smoothed(
             ex = n - 1 if rn == 1 else n - rn + 1
             if ex <= _EWMA_TRUNC_BITS:
                 total += x << (_EWMA_TRUNC_BITS - ex)
-        return total / float((1 << _EWMA_TRUNC_BITS) * 100)
+        ewma = total / float((1 << _EWMA_TRUNC_BITS) * 100)
+        return {"last_total": deque[-1][1] / 100.0, "ewma": ewma}
 
-    def step(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, n_obs, days, xs, p_days, p_xs = state.get
-            deque = list(zip(days, xs))
-            pending = dict(zip(p_days, p_xs))
-        else:
-            n, n_obs, deque, pending = 0, 0, [], {}
-        if state.hasTimedOut:  # pragma: no cover - no timeout is set
-            state.remove()
-            return
-        for pdf in pdfs:
-            for day_us, cents in zip(pdf["day_us"], pdf["cents"]):
-                d = int(day_us)
-                n_obs += 1
-                pending[d] = pending.get(d, 0) + int(cents)
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # commit CLOSED days (end <= wm) oldest-first; open days stay
-        # pending. Committed days are always older than pending ones.
-        for d, x in sorted(pending.items()):
-            if d + _DAY_US <= wm_us:
-                n += 1
-                deque.append((d, pending.pop(d)))
-        deque = deque[-_EWMA_KEEP:]
-        pend = sorted(pending.items())
-        state.update((
-            n,
-            n_obs,
-            [d for d, _ in deque],
-            [x for _, x in deque],
-            [d for d, _ in pend],
-            [x for _, x in pend],
-        ))
-        # provisional: committed deque + open days folded on a copy
-        pn, pdq = n, list(deque)
-        for d, x in pend:
-            pn += 1
-            pdq.append((d, x))
-        pdq = pdq[-_EWMA_KEEP:]
-        if pn == 0:
-            return
-        last_day, last_x = pdq[-1]
-        yield pd.DataFrame(
-            [{
-                "user_id": key[0],
-                "n_days": pn,
-                "n_obs": n_obs,
-                "last_day": pd.to_datetime(last_day, unit="us"),
-                "last_total": last_x / 100.0,
-                "ewma": ewma_from(pdq, pn),
-            }]
-        )
-
+    e = _daily_cents(events_stream, watermark)
     return e.groupBy("user_id").applyInPandasWithState(
-        step,
+        _closed_day_step(_EWMA_KEEP, emit),
         EWMA_OUTPUT_SCHEMA,
         EWMA_STATE_SCHEMA,
         "update",
@@ -1275,14 +1208,8 @@ def streaming_holt_linear(
     same micro-dollar HALF-UP quantization — so parity is
     bit-identical.
 
-    Commit discipline at DAY granularity, exactly the EWMA twin's:
-    a day folds into the committed deque only once the watermark
-    passes its END; open days accumulate in a pending partial-sum
-    buffer and fold provisionally on a copy, so every update-mode
-    emission reflects all data seen so far in event-time order.
-    In-contract stragglers sit at/above the watermark, so pending
-    days are always newer than every committed day and the
-    provisional fold's day order is committed-then-pending.
+    Commit discipline at DAY granularity, the EWMA twin's
+    ``_closed_day_step``.
 
     ``n_obs`` strictly grows with every arrival; consumers (and the
     parity tests) pick the final emission by max ``n_obs``.
@@ -1293,81 +1220,13 @@ def streaming_holt_linear(
     """
     from ..operators.timeseries import HOLT_MAX_OBS
 
-    e = (
-        events_stream.filter(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan(F.col("value"))
-            & (F.abs(F.col("value")) < F.lit(1e9))
-        )
-        .withWatermark("ts", watermark)
-        .select(
-            "user_id",
-            "ts",
-            F.unix_micros(F.date_trunc("DAY", F.col("ts"))).alias(
-                "day_us"
-            ),
-            (F.col("value").cast("decimal(12,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-    )
+    def emit(deque, n):
+        level, trend, forecast = _holt_fold([x for _, x in deque])
+        return {"level": level, "trend": trend, "forecast": forecast}
 
-    def step(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, n_obs, days, xs, p_days, p_xs = state.get
-            deque = list(zip(days, xs))
-            pending = dict(zip(p_days, p_xs))
-        else:
-            n, n_obs, deque, pending = 0, 0, [], {}
-        if state.hasTimedOut:  # pragma: no cover - no timeout is set
-            state.remove()
-            return
-        for pdf in pdfs:
-            for day_us, cents in zip(pdf["day_us"], pdf["cents"]):
-                d = int(day_us)
-                n_obs += 1
-                pending[d] = pending.get(d, 0) + int(cents)
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for d, x in sorted(pending.items()):
-            if d + _DAY_US <= wm_us:
-                n += 1
-                deque.append((d, pending.pop(d)))
-        deque = deque[-HOLT_MAX_OBS:]
-        pend = sorted(pending.items())
-        state.update((
-            n,
-            n_obs,
-            [d for d, _ in deque],
-            [x for _, x in deque],
-            [d for d, _ in pend],
-            [x for _, x in pend],
-        ))
-        pn, pdq = n, list(deque)
-        for d, x in pend:
-            pn += 1
-            pdq.append((d, x))
-        pdq = pdq[-HOLT_MAX_OBS:]
-        if pn == 0:
-            return
-        level, trend, forecast = _holt_fold([x for _, x in pdq])
-        yield pd.DataFrame(
-            [{
-                "user_id": key[0],
-                "n_days": pn,
-                "n_obs": n_obs,
-                "last_day": pd.to_datetime(pdq[-1][0], unit="us"),
-                "level": level,
-                "trend": trend,
-                "forecast": forecast,
-            }]
-        )
-
+    e = _daily_cents(events_stream, watermark)
     return e.groupBy("user_id").applyInPandasWithState(
-        step,
+        _closed_day_step(HOLT_MAX_OBS, emit),
         HOLT_OUTPUT_SCHEMA,
         HOLT_STATE_SCHEMA,
         "update",
@@ -1534,33 +1393,14 @@ def streaming_session_concurrency(
             open_s, open_e, pending = -1, -1, []
         uid = key[0]
         rows: list[dict] = []
-
-        if state.hasTimedOut:
-            # wm passed everything this user has by more than the gap:
-            # pending is all committable and nothing can extend the tail
-            for u in sorted(pending):
-                if open_s < 0:
-                    open_s = open_e = u
-                elif u - open_e <= _SESSION_GAP_US:
-                    open_e = u
-                else:
-                    rows.extend(segments(uid, open_s, open_e))
-                    open_s = open_e = u
-            if open_s >= 0:
-                rows.extend(segments(uid, open_s, open_e))
-            state.remove()
-            if rows:
-                yield pd.DataFrame(rows)
-            return
-
         for pdf in pdfs:
             pending.extend(int(u) for u in pdf["us"])
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        pending.sort()
-        n_commit = 0
-        while n_commit < len(pending) and pending[n_commit] < wm_us:
-            n_commit += 1
-        for u in pending[:n_commit]:
+        # a timed-out user: the watermark passed everything it holds by
+        # more than the gap, so all of pending commits and the open
+        # session finalizes below
+        wm_us = math.inf if state.hasTimedOut else state.getCurrentWatermarkMs() * 1000
+        done, pending = _commit_split(pending, wm_us, order=None, event_us=None)
+        for u in done:
             if open_s < 0:
                 open_s = open_e = u
             elif u - open_e <= _SESSION_GAP_US:
@@ -1568,7 +1408,6 @@ def streaming_session_concurrency(
             else:
                 rows.extend(segments(uid, open_s, open_e))
                 open_s = open_e = u
-        pending = pending[n_commit:]
         # finalize the open session once nothing admissible can extend
         # it (wm already past its end by more than the gap) AND no
         # buffered event precedes that bound
@@ -1588,12 +1427,11 @@ def streaming_session_concurrency(
             )
         elif state.exists:
             # nothing open, nothing pending: drop the state row instead
-            # of keeping (-1, -1, []) with no timeout. Unreachable
-            # while Spark's late-row filter keeps every delivered row
-            # >= watermark (delivered rows land in pending), but a
-            # leaked empty register with no eviction path is the one
-            # shape that would never die — remove defensively
-            # (ADVICE r10).
+            # of keeping (-1, -1, []) with no timeout — always the case
+            # after a timeout; otherwise unreachable while Spark's
+            # late-row filter keeps every delivered row >= watermark,
+            # but a leaked empty register with no eviction path is the
+            # one shape that would never die.
             state.remove()
         if rows:
             yield pd.DataFrame(rows)
